@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ed_clickhouse_spark.functions import register_sql_aliases
 from ed_clickhouse_spark.session import get_spark
 from ed_clickhouse_spark.sources.registry import DLQ_TABLE, FAMILIES, BY_TABLE
-from ed_clickhouse_spark.streaming.pipeline import start_ingest
+from ed_clickhouse_spark.streaming.pipeline import fan_out, start_ingest
 
 
 class _ToTableMV:
@@ -267,14 +267,19 @@ class Engine:
         mv.states().createOrReplaceTempView(f"{mv.spec.name}_state")
 
     def refresh_views(self) -> None:
-        """(Re)register every existing table as a temp view."""
-        for fam in FAMILIES:
-            path = os.path.join(self.warehouse, fam.table)
-            if os.path.exists(path):
-                self.spark.read.parquet(path).createOrReplaceTempView(fam.table)
-        dlq = os.path.join(self.warehouse, DLQ_TABLE)
-        if os.path.exists(dlq):
-            self.spark.read.parquet(dlq).createOrReplaceTempView("dlq")
+        """(Re)register every existing table as a temp view, the ten
+        reads (schema + file listing each) concurrently."""
+        views = {f.table: f.table for f in FAMILIES} | {DLQ_TABLE: "dlq"}
+
+        def register(table):
+            path = os.path.join(self.warehouse, table)
+            self.spark.read.parquet(path).createOrReplaceTempView(views[table])
+
+        fan_out(
+            self.spark,
+            register,
+            [t for t in views if os.path.exists(os.path.join(self.warehouse, t))],
+        )
 
     def migrate(self, migrations_dir: str):
         """Apply a directory of ClickHouse ``*.up.sql`` migrations —

@@ -45,15 +45,16 @@ def append_events(df: DataFrame, warehouse: str, table: str) -> None:
     )
 
 
-def append_dlq(df: DataFrame, warehouse: str, reason: str) -> None:
-    """Dead-letter append: raw payload + subject + reason. The reference
+def append_dlq(df: DataFrame, warehouse: str) -> None:
+    """Dead-letter append of ``df``'s (subject, payload, reason) rows:
+    raw payload + subject + reason + the append's timestamp. The reference
     silently Terms these (``src/main.rs:70``, ``src/handler.rs:130``);
     keeping them queryable is a strict upgrade."""
     (
         df.select(
             F.col("subject"),
             F.col("payload").alias("raw_payload"),
-            F.lit(reason).alias("reason"),
+            F.col("reason"),
             F.current_timestamp().alias("dlq_at"),
         )
         .write.mode("append")

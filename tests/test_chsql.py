@@ -5710,15 +5710,24 @@ def test_fuzz_r11_order_by_nulls_last_default(views):
 def test_fuzz_r11_length_on_declared_array_column(views):
     """Specs-aware polymorphic length: a BARE column declared
     Array(...) in the DDL routes length/empty to size() — the
-    reference's own tables carry Array(String) columns
-    (/root/reference/migrations/009_...sql:24-27), so
+    reference's own tables carry Array(String) columns (its
+    migrations/009 shahre_farang_item_events: genres, labels), so
     length(genres) through Engine.ch_sql must mean array length.
     Without specs (or on ambiguity) the string path is kept."""
     from ed_clickhouse_spark import ddl
 
-    spec = ddl.parse_clickhouse_ddl(open(
-        "/root/reference/migrations/"
-        "009_create_shahre_farang_item_events_table.up.sql").read())
+    spec = ddl.parse_clickhouse_ddl("""
+CREATE TABLE IF NOT EXISTS shahre_farang_item_events (
+    event_id String,
+    event_name String,
+    timestamp DateTime,
+    item_id String,
+    item_title String,
+    genres Array(String),
+    labels Array(String)
+) ENGINE = MergeTree()
+ORDER BY (timestamp, event_name);
+""")
     spec = spec[0] if isinstance(spec, list) else spec
     specs = {spec.name: spec}
     tr = translate(

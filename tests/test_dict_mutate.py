@@ -172,13 +172,13 @@ def test_replay_dlq(spark, tmp_path):
         "timestamp": 1_700_000_000, "service_origin": "t", "platform": "web",
     })
     replayable = spark.createDataFrame(
-        [("events.login", ok)], ["subject", "payload"]
+        [("events.login", ok, "unroutable_subject")], ["subject", "payload", "reason"]
     )
-    append_dlq(replayable, wh, reason="unroutable_subject")
+    append_dlq(replayable, wh)
     parked = spark.createDataFrame(
-        [("events.login", "{not json")], ["subject", "payload"]
+        [("events.login", "{not json", "decode_error")], ["subject", "payload", "reason"]
     )
-    append_dlq(parked, wh, reason="decode_error")
+    append_dlq(parked, wh)
 
     n = eng.replay_dlq(reasons=["unroutable_subject"])
     assert n == 1

@@ -494,3 +494,135 @@ def test_inline_csv_insert_randomized_roundtrip(spark, tmp_path, seed):
             eng.ch_sql(f"DROP TABLE {tbl}")
 
     run()
+
+
+def _wire_batch(spark, rows):
+    from ed_clickhouse_spark.streaming.pipeline import WIRE_SCHEMA
+
+    return spark.createDataFrame(rows, WIRE_SCHEMA)
+
+
+def _watch(i: int, ts: int) -> str:
+    ev = _envelope(i, "watch", ts)
+    ev.update({"item_id": f"it{i}", "video_position": i, "video_duration": 100})
+    return json.dumps(ev)
+
+
+@pytest.fixture(scope="module")
+def dirty_batch(spark, tmp_path_factory):
+    """One batch over three families with unroutable rows and corrupt
+    payloads in two of them, through process_batch; returns the
+    warehouse and process_batch's own counts."""
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    wh = str(tmp_path_factory.mktemp("dirty_wh"))
+    ts = 1_700_000_000
+    rows = [("events.login", json.dumps(_envelope(i, "login", ts + i))) for i in range(7)]
+    rows += [("events.angulak.watch", _watch(100 + i, ts + i)) for i in range(4)]
+    rows += [("events.session", json.dumps(_envelope(200 + i, "session", ts))) for i in range(3)]
+    rows += [("events.login", "{not json"), ("events.login", '{"event_id": null}')]
+    rows += [("events.angulak.watch", "[1, 2")]
+    rows += [("events.unknown", "{}"), (None, json.dumps(_envelope(300, "x", ts)))]
+    return wh, process_batch(_wire_batch(spark, rows), wh)
+
+
+def test_process_batch_writes_one_dlq_append(spark, dirty_batch):
+    """Unroutable rows and every family's corrupt rows land in ONE _dlq
+    append: current_timestamp() is fixed per query, so a single write
+    leaves a single dlq_at (one append per reason or family gives >= 2)."""
+    wh, _ = dirty_batch
+    dlq = spark.read.parquet(f"{wh}/_dlq")
+    per_reason = {r["reason"]: r["count"] for r in dlq.groupBy("reason").count().collect()}
+    assert per_reason == {"unroutable_subject": 2, "decode_error": 3}
+    assert dlq.select("dlq_at").distinct().count() == 1
+    bad_subjects = sorted(
+        r["subject"] for r in dlq.filter(F.col("reason") == "decode_error").collect()
+    )
+    assert bad_subjects == ["events.angulak.watch", "events.login", "events.login"]
+
+
+def test_process_batch_returns_landed_counts(spark, dirty_batch):
+    """process_batch reports what its write jobs observed; it must equal
+    what a read of the warehouse finds."""
+    wh, counts = dirty_batch
+    landed = {
+        t: spark.read.parquet(f"{wh}/{t}").count()
+        for t in ("login_events", "angulak_watch_events", "session_events")
+    }
+    assert counts["rows"] == landed == {
+        "login_events": 7, "angulak_watch_events": 4, "session_events": 3,
+    }
+    dlq = spark.read.parquet(f"{wh}/_dlq")
+    assert counts["dlq"] == {
+        r["reason"]: r["count"] for r in dlq.groupBy("reason").count().collect()
+    }
+
+
+def test_clean_batch_writes_no_dlq(spark, tmp_path):
+    import os
+
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    wh = str(tmp_path / "wh")
+    rows = [("events.login", json.dumps(_envelope(i, "login", 1_700_000_000))) for i in range(3)]
+    assert process_batch(_wire_batch(spark, rows), wh) == {
+        "rows": {"login_events": 3}, "dlq": {},
+    }
+    assert not os.path.exists(f"{wh}/_dlq")
+
+
+def test_fan_out_jobs_keep_callers_job_group(spark, tmp_path):
+    """The concurrent family appends run on driver threads; each must
+    inherit the caller's local properties, so a job-group cancel
+    (StreamingQuery.stop()) and per-group accounting reach them."""
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    ts = 1_700_000_000
+    rows = [("events.login", json.dumps(_envelope(1, "login", ts)))]
+    rows += [("events.angulak.watch", _watch(2, ts))]
+    rows += [("events.session", json.dumps(_envelope(3, "session", ts)))]
+    batch = _wire_batch(spark, rows)
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("g-ingest", "fan-out test")
+    try:
+        process_batch(batch, str(tmp_path / "wh"))
+    finally:
+        sc._jsc.clearJobGroup()
+    # 1 routing job on the caller's thread + one append per family
+    assert len(sc.statusTracker().getJobIdsForGroup("g-ingest")) >= 3 + 1
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_failed_family_append_raises_and_leaves_nothing_cached(spark, tmp_path):
+    """One family's append fails (a regular file sits at its table path):
+    process_batch re-raises after the siblings finish, and neither the
+    batch nor the MV-pinned decoded frame of another family stays cached."""
+    from pyspark import StorageLevel
+
+    from ed_clickhouse_spark.sources.decode import decode_json
+    from ed_clickhouse_spark.streaming.pipeline import process_batch
+
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    (wh / "angulak_watch_events").write_text("not a directory")
+    ts = 1_700_000_000
+    rows = [("events.login", json.dumps(_envelope(i, "login", ts))) for i in range(3)]
+    rows += [("events.angulak.watch", _watch(10, ts))]
+    batch = _wire_batch(spark, rows)
+
+    class Hook:
+        calls = 0
+
+        def on_batch(self, df):
+            Hook.calls += 1
+
+    with pytest.raises(Exception):
+        process_batch(batch, str(wh), views={"login_events": [Hook()]})
+    assert Hook.calls == 0
+    assert batch.storageLevel == StorageLevel.NONE
+    login = BY_TABLE["login_events"]
+    decoded = decode_json(batch.filter(F.col("subject") == login.subject), login)
+    assert decoded.storageLevel == StorageLevel.NONE
+    # the sibling family still appended before the failure re-raised
+    assert spark.read.parquet(f"{wh}/login_events").count() == 3
